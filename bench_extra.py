@@ -2,9 +2,9 @@
 """Round-6 optimization profiling harness (bench.py is FROZEN; extra
 measurements live here, cited from OPTIMIZATION_r06.md).
 
-Modes:
-  python3 bench_extra.py segments   # per-stage timing of build_segments
-  python3 bench_extra.py store      # per-stage timing of build_index_store
+Modes (per-stage build numbers: perfbench/run.py --trace 1):
+  python3 bench_extra.py segments   # timing of build_segments
+  python3 bench_extra.py store      # timing of build_index_store
   python3 bench_extra.py inc        # per-commit timing of the incremental path
   python3 bench_extra.py queries    # noop-sink isolation of the query entries
   python3 bench_extra.py wand       # wand or/and path timing
@@ -54,7 +54,7 @@ def profile_segments(spark):
     for rep in range(2):
         d = tempfile.mkdtemp(prefix="mls_prof_seg_")
         t0 = time.time()
-        build_segments(corpus, d, n_shards=32, salt_buckets=8, verbose=True)
+        build_segments(corpus, d, n_shards=32, salt_buckets=8)
         print(f"build_segments rep{rep}: {time.time() - t0:.3f}s", flush=True)
         shutil.rmtree(d, ignore_errors=True)
     corpus.unpersist()

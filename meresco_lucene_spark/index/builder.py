@@ -17,9 +17,9 @@ quantized document length, SmallFloat int4 round-trip) is precomputed at
 build time into ``field_lengths.norm_dl`` so query-time scoring is pure
 column arithmetic.
 
-The compressed, shard-partitioned on-disk segment format (delta+varint
-blocks, block-max scores for WAND, lineage rows for resume) lives in
-``index/segments.py``; this module is the in-memory/DataFrame form that
+The compressed, shard-partitioned on-disk format (delta+varint blocks,
+block-max scores for WAND, lineage rows for resume) lives in
+``index/store.py``; this module is the in-memory/DataFrame form that
 all query operators consume.
 
 Scale notes (100 TB design):
@@ -27,7 +27,7 @@ Scale notes (100 TB design):
   map-side first (Spark HashAggregate partial/final), exactly the
   reference's SubCollector/complete() pattern (SuperCollector.java:38-53);
 - postings are hash-partitioned by term at the shuffle — skewed hot
-  terms ("import", "return") are handled in segments.py via salted
+  terms ("import", "return") are handled in store.py via salted
   sharding; the DataFrame form relies on AQE skew handling;
 - doc ids must be *stable* (a pure function of the input, never of
   partitioning) so checkpoint resume keeps rank-identity — callers
@@ -52,6 +52,9 @@ from meresco_lucene_spark.query.bm25 import (
     quantize_dl_expr,
 )
 
+# estimated input size above which the tokenize passes are spread over
+# the session's parallelism (see _spread_for_tokenize)
+TOKENIZE_SPREAD_MIN_BYTES = 3 << 20
 
 
 def _spread_for_tokenize(df: DataFrame) -> DataFrame:
@@ -69,13 +72,10 @@ def _spread_for_tokenize(df: DataFrame) -> DataFrame:
     threshold (a small incremental batch commit) the exchange costs
     more than it saves (A/B-measured r6: +0.7s on a 1.7k-doc commit,
     −7s on a 50k-doc build — the measured crossover sits between those
-    input sizes, hence the 3 MB default), and a large input already
-    has >= parallelism partitions and is left untouched (guide §2.2:
-    scale-adaptive partitioning, no constant tuned to either local
-    mode or the cluster). Threshold override:
-    MLS_TOKENIZE_SPREAD_MIN_BYTES."""
-    import os
-
+    input sizes, hence TOKENIZE_SPREAD_MIN_BYTES), and a large input
+    already has >= parallelism partitions and is left untouched (guide
+    §2.2: scale-adaptive partitioning, no constant tuned to either
+    local mode or the cluster)."""
     try:
         par = df.sparkSession.sparkContext.defaultParallelism
         nparts = df.rdd.getNumPartitions()
@@ -84,10 +84,7 @@ def _spread_for_tokenize(df: DataFrame) -> DataFrame:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return df
-    min_bytes = int(
-        os.environ.get("MLS_TOKENIZE_SPREAD_MIN_BYTES", str(3 << 20))
-    )
-    return df.repartition(par) if est >= min_bytes else df
+    return df.repartition(par) if est >= TOKENIZE_SPREAD_MIN_BYTES else df
 
 
 def posting_frames(

@@ -34,7 +34,7 @@ def exhaustive_topk(spark, seg, term, k=10):
     post = seg.term_postings(term).toPandas()
     if not len(post):
         return []
-    docs = spark.read.parquet(os.path.join(seg.out_dir, "docs")).toPandas().set_index("doc_id")
+    docs = seg.lengths.toPandas().set_index("doc_id")
     dft = seg.term_stats.filter(F.col("term") == term).collect()[0]["df"]
     s = bm25_score_numpy(
         post["tf"].to_numpy(float),
@@ -75,12 +75,10 @@ def exhaustive_multi_topk(spark, seg, terms, mode, k=10):
 
 
 def exhaustive_scores(spark, seg, term):
-    import os as _os
-
     post = seg.term_postings(term).toPandas()
     if not len(post):
         return []
-    docs = spark.read.parquet(_os.path.join(seg.out_dir, "docs")).toPandas().set_index("doc_id")
+    docs = seg.lengths.toPandas().set_index("doc_id")
     from pyspark.sql import functions as F
 
     dft = seg.term_stats.filter(F.col("term") == term).collect()[0]["df"]
@@ -280,13 +278,13 @@ def test_lineage_observation_matches_readback(spark, tmp_path, monkeypatch):
     (schema and values) to the read-back aggregation they replace."""
     import os
 
-    from meresco_lucene_spark.index import segments as seg_mod
+    from meresco_lucene_spark.index import store as store_mod
 
     corpus = synthesize_corpus(spark, 80, seed=5, partitions=4)
     a = str(tmp_path / "obs")
     b = str(tmp_path / "readback")
     build_segments(corpus, a, n_shards=4, salt_buckets=2, block_size=16)
-    monkeypatch.setattr(seg_mod, "LINEAGE_OBS_MAX_SHARDS", 0)
+    monkeypatch.setattr(store_mod, "LINEAGE_OBS_MAX_SHARDS", 0)
     build_segments(corpus, b, n_shards=4, salt_buckets=2, block_size=16)
 
     def rows(d):
@@ -305,7 +303,7 @@ def test_auto_n_shards_bounds():
     whenever the 65536 cap doesn't bind; the floor keeps sizable corpora
     on all cores but is itself capped so a tiny build (an incremental
     batch commit) isn't padded with near-empty shards."""
-    from meresco_lucene_spark.index.segments import (
+    from meresco_lucene_spark.index.store import (
         ENCODE_TARGET_BYTES,
         OCC_ROW_BYTES,
         auto_n_shards,
@@ -330,7 +328,7 @@ def test_auto_sharded_build_queries_identically(spark, tmp_path):
     b = build_segments(
         corpus, str(tmp_path / "fixed"), n_shards=4, salt_buckets=2, block_size=16
     )
-    from meresco_lucene_spark.index.segments import auto_n_shards
+    from meresco_lucene_spark.index.store import auto_n_shards
 
     assert a.meta["n_shards"] == auto_n_shards(
         a.meta["sum_dl"], spark.sparkContext.defaultParallelism

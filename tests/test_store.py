@@ -20,6 +20,7 @@ from meresco_lucene_spark.index.store import (
     build_index_store,
     decode_positions,
     encode_positions,
+    open_persistent_index,
 )
 from meresco_lucene_spark.query.executor import facet_counts_df, hits, search
 from meresco_lucene_spark.query.ir import FILTER, MUST, MUST_NOT, SHOULD, Q
@@ -60,8 +61,8 @@ def test_positions_codec_roundtrip():
     import numpy as np
 
     lists = [[0, 2, 5], [7], [], [1, 1000, 1001], [3]]
-    buf, sizes = encode_positions(np.array(lists, dtype=object))
     lens = np.array([len(p) for p in lists])
+    buf, sizes = encode_positions(np.array([p for ps in lists for p in ps]), lens)
     got = decode_positions(buf, lens)
     assert got == [list(p) for p in lists]
 
@@ -353,7 +354,7 @@ def test_pin_build_config_resume_keeps_shard_mapping(tmp_path):
     resume; a conflicting explicit n_shards is an error."""
     import pytest as _pytest
 
-    from meresco_lucene_spark.index.segments import pin_build_config
+    from meresco_lucene_spark.index.store import pin_build_config
 
     n, s = pin_build_config(str(tmp_path), False, None, 8, lambda: 7)
     assert (n, s) == (7, 7)
@@ -365,3 +366,67 @@ def test_pin_build_config_resume_keeps_shard_mapping(tmp_path):
         pin_build_config(str(tmp_path), True, 13, 8, lambda: 13)
     # a FRESH (non-resume) build re-pins
     assert pin_build_config(str(tmp_path), False, 4, 8, lambda: 99) == (4, 4)
+
+
+def test_term_meta_one_row_per_distinct_term(stores):
+    """The reader's term dictionary returns one row per distinct present
+    term, in first-seen order, however often a term repeats."""
+    _, disk = stores
+    rows = disk._term_meta("text", ["spark", "join", "spark", "nosuchterm", "join"])
+    assert [r["term"] for r in rows] == ["spark", "join"]
+
+
+def test_rebuild_at_same_path_opens_fresh(spark, tmp_path):
+    """meta.json is published by atomic rename, so a store rebuilt at
+    the same path is never read half-written and open_persistent_index
+    never hands out the previous build's cached handle."""
+    import os
+
+    out = str(tmp_path / "rebuilt")
+
+    def build(n):
+        pdf = pd.DataFrame({"doc_id": range(n), "text": ["alpha beta"] * n})
+        build_index_store(spark.createDataFrame(pdf), out, text_cols=["text"])
+
+    build(5)
+    assert open_persistent_index(spark, out).num_docs() == 5
+    build(9)
+    assert open_persistent_index(spark, out).num_docs() == 9
+    assert not os.path.exists(os.path.join(out, "meta.json.tmp"))
+
+
+def test_segments_build_is_a_single_field_store(spark, tmp_path):
+    """build_segments writes the store's one on-disk format: its output
+    opens as a PersistentIndex and answers like a build_index_store of
+    the same corpus, and the SegmentIndex view's WAND top-k is the
+    store's own."""
+    from meresco_lucene_spark.corpus import synthesize_corpus
+    from meresco_lucene_spark.index.segments import build_segments
+
+    corpus = synthesize_corpus(spark, 120, seed=11, partitions=2)
+    seg = build_segments(
+        corpus, str(tmp_path / "seg"), n_shards=4, salt_buckets=2, block_size=16
+    )
+    store_dir = str(tmp_path / "store")
+    build_index_store(corpus, store_dir, text_cols=["content"])
+    via_seg = open_persistent_index(spark, seg.out_dir)
+    store = open_persistent_index(spark, store_dir)
+
+    def page(ix, q):
+        r = search(ix, q)
+        return r.total, [(h.id, round(h.score, 9)) for h in r.hits]
+
+    for q in (
+        Q.term("content", "import"),
+        Q.or_(Q.term("content", "def"), Q.term("content", "self")),
+        Q.and_(Q.term("content", "import"), Q.term("content", "return")),
+    ):
+        assert page(via_seg, q) == page(store, q)
+
+    def top(df):
+        return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
+
+    for term in ("import", "fn", "nosuchterm"):
+        assert top(seg.term_topk(term, 10)) == top(store.term_topk("content", term, 10))
+    for terms in (["import", "return"], ["def", "self", "fn"]):
+        assert top(seg.or_topk(terms, 10)) == top(store.or_topk("content", terms, 10))
