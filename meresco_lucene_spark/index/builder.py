@@ -7,20 +7,23 @@ plus doc-values and norms (reference Lucene.java:160-171, 920-945).
 Spark-first restatement:
 
     corpus DF --tokenize (Arrow UDF)--> tokens
-        --posexplode--> (doc_id, pos, term)
-        --groupBy(term, doc_id)--> tf + sorted positions   [partial agg, 1 shuffle]
-        --groupBy(term)--> df/cf term stats                [partial agg, 1 shuffle]
+        --posexplode--> occurrences (field, term, doc_id, pos, _dl)
+        --groupBy(field, term, doc_id)--> tf + sorted positions + _bdl
+                                                           [partial agg, 1 shuffle]
+        --groupBy(field, term)--> df/cf term stats         [partial agg, 1 shuffle]
 
 Everything stays in whole-stage-codegen'd built-ins except the tokenizer
 (vectorized pandas UDF, Arrow-batched).  The per-doc "norm" (Lucene's
-quantized document length, SmallFloat int4 round-trip) is precomputed at
-build time into ``field_lengths.norm_dl`` so query-time scoring is pure
-column arithmetic.
+quantized document length, SmallFloat int4 round-trip) is computed at
+build time and carried on every posting as ``_bdl`` (raw dl, or norm_dl
+when built quantized), so query-time scoring is pure column arithmetic
+over the postings alone.
 
-The compressed, shard-partitioned on-disk format (delta+varint blocks,
-block-max scores for WAND, lineage rows for resume) lives in
-``index/store.py``; this module is the in-memory/DataFrame form that
-all query operators consume.
+The occurrence front half (:func:`occurrence_frames`) is shared with the
+compressed, shard-partitioned on-disk format (delta+varint blocks,
+block-max scores for WAND, lineage rows for resume) in
+``index/store.py``, whose reader decodes to the same postings schema;
+this module holds the session-cached DataFrame form.
 
 Scale notes (100 TB design):
 - the two groupBys are the only shuffles; both are partial-aggregated
@@ -37,6 +40,7 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -87,99 +91,6 @@ def _spread_for_tokenize(df: DataFrame) -> DataFrame:
     return df.repartition(par) if est >= TOKENIZE_SPREAD_MIN_BYTES else df
 
 
-def posting_frames(
-    df: DataFrame,
-    id_col: str,
-    text_cols: list[str] | None = None,
-    keyword_cols: list[str] | None = None,
-    array_cols: list[str] | None = None,
-    dutch_cols: list[str] | None = None,
-    positions: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """LAZY (postings, field_lengths) frames for a column spec — the
-    shared front half of the session index (InvertedIndex.build) and the
-    persistent store build (store.build_index_store), which materialize
-    them differently (heap cache vs parquet intermediates).
-
-    postings:      (field, term, doc_id, tf, positions array<int>)
-    field_lengths: (field, doc_id, dl, norm_dl)
-    """
-    text_cols = list(text_cols or [])
-    keyword_cols = list(keyword_cols or [])
-    array_cols = list(array_cols or [])
-    dutch_cols = list(dutch_cols or [])
-    df = _spread_for_tokenize(df)
-    doc = F.col(id_col).alias("doc_id")
-
-    posting_parts: list[DataFrame] = []
-    length_parts: list[DataFrame] = []
-    col_plans = (
-        [(c, "text") for c in text_cols]
-        + [(c, "array") for c in array_cols]
-        + [(c, "dutch") for c in dutch_cols]
-    )
-    for col, kind in col_plans:
-        # JVM tokenizer (codegen) — the pandas-UDF twin exists for
-        # exotic folds; contracts are identical (tokenizer.py).
-        if kind == "array":
-            tok_expr = qcol(col)
-        elif kind == "dutch":
-            from meresco_lucene_spark.analysis.dutch import tokenize_dutch_udf
-
-            tok_expr = tokenize_dutch_udf(qcol(col))
-        else:
-            tok_expr = tokenize_expr(qcol(col))
-        toks = df.select(doc, tok_expr.alias("tokens"))
-        exploded = toks.select(
-            "doc_id", F.posexplode_outer("tokens").alias("pos", "term")
-        ).filter(F.col("term").isNotNull())
-        agg_cols = [F.count("*").cast("long").alias("tf")]
-        if positions:
-            agg_cols.append(F.sort_array(F.collect_list("pos")).alias("positions"))
-        p = (
-            exploded.groupBy("term", "doc_id")
-            .agg(*agg_cols)
-            .withColumn("field", F.lit(col))
-        )
-        if not positions:
-            p = p.withColumn("positions", F.lit(None).cast("array<int>"))
-        posting_parts.append(p.select("field", "term", "doc_id", "tf", "positions"))
-        length_parts.append(
-            toks.select(
-                F.lit(col).alias("field"),
-                "doc_id",
-                F.coalesce(F.size("tokens"), F.lit(0)).cast("long").alias("dl"),
-            )
-        )
-    for col in keyword_cols:
-        kw = df.filter(qcol(col).isNotNull()).select(
-            F.lit(col).alias("field"),
-            qcol(col).cast("string").alias("term"),
-            doc,
-            F.lit(1).cast("long").alias("tf"),
-            F.array(F.lit(0)).alias("positions"),
-        )
-        posting_parts.append(kw)
-        # Keyword fields omit norms: dl recorded as 1 for completeness.
-        length_parts.append(
-            df.filter(qcol(col).isNotNull()).select(
-                F.lit(col).alias("field"), doc, F.lit(1).cast("long").alias("dl")
-            )
-        )
-
-    if not posting_parts:
-        raise ValueError("at least one text or keyword column required")
-
-    postings = posting_parts[0]
-    for p in posting_parts[1:]:
-        postings = postings.unionByName(p)
-    field_lengths = length_parts[0]
-    for p in length_parts[1:]:
-        field_lengths = field_lengths.unionByName(p)
-    field_lengths = field_lengths.withColumn("norm_dl", quantize_dl_expr(F.col("dl")))
-    return postings, field_lengths
-
-
 def occurrence_frames(
     df: DataFrame,
     id_col: str,
@@ -187,24 +98,21 @@ def occurrence_frames(
     keyword_cols: list[str] | None = None,
     array_cols: list[str] | None = None,
     dutch_cols: list[str] | None = None,
-    inline_dl: str | None = None,
+    quantized: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """LAZY (occurrences, field_lengths) frames — the store build's
-    front half. Unlike :func:`posting_frames`, occurrences stay one row
-    per token position (field, term, doc_id, pos) with NO aggregation:
-    the only heavy operator between tokenize and the shard encode is a
-    plain shuffle. This avoids the collect_list ObjectHashAggregate
-    (whose sort-fallback/spill was the store build's highest-variance
-    stage); tf and position lists are derived vectorized inside the
-    whole-shard numpy encode, which sorts everything anyway.
+    """LAZY (occurrences, field_lengths) frames — the front half shared
+    by the session index (:meth:`InvertedIndex.build`, which aggregates
+    the occurrences to postings) and the store build
+    (``store.build_index_store``, which derives tf and position lists
+    inside its whole-shard numpy encode: no collect_list aggregate,
+    whose sort-fallback/spill was that build's highest-variance stage).
 
-    ``inline_dl`` ("dl" or "norm_dl"): additionally carry the document
-    length as a ``_dl`` column on every occurrence row, computed from
-    the SAME token array the occurrences come from. The shard encode
-    then needs no (field, doc_id) join against the lengths table at all
-    — one whole shuffle join removed from the build (guide §2.4); the
-    extra column is a run-length-friendly int that parquet compresses
-    to almost nothing."""
+    occurrences:   (field, term, doc_id, pos, _dl), one row per token
+                   position. ``_dl`` is the document length, computed
+                   from the SAME token array the occurrences come from
+                   (SmallFloat-quantized when ``quantized``), so no
+                   consumer joins the lengths table to score or encode.
+    field_lengths: (field, doc_id, dl, norm_dl)"""
     text_cols = list(text_cols or [])
     keyword_cols = list(keyword_cols or [])
     array_cols = list(array_cols or [])
@@ -213,9 +121,7 @@ def occurrence_frames(
     doc = F.col(id_col).alias("doc_id")
 
     def _dl_of(raw: Column) -> Column:
-        return (
-            quantize_dl_expr(raw) if inline_dl == "norm_dl" else raw
-        ).cast("long").alias("_dl")
+        return (quantize_dl_expr(raw) if quantized else raw).cast("long").alias("_dl")
 
     occ_parts: list[DataFrame] = []
     length_parts: list[DataFrame] = []
@@ -234,22 +140,18 @@ def occurrence_frames(
         else:
             tok_expr = tokenize_expr(qcol(col))
         toks = df.select(doc, tok_expr.alias("tokens"))
-        occ_cols = [
-            F.lit(col).alias("field"), "term", "doc_id",
-            F.col("pos").cast("int").alias("pos"),
-        ]
-        if inline_dl:
-            occ_cols.append(
-                _dl_of(F.coalesce(F.size("tokens"), F.lit(0)))
-            )
         occ_parts.append(
             toks.select(
                 "doc_id",
-                F.col("tokens"),
+                # once per doc, not per exploded token row
+                _dl_of(F.coalesce(F.size("tokens"), F.lit(0))),
                 F.posexplode_outer("tokens").alias("pos", "term"),
             )
             .filter(F.col("term").isNotNull())
-            .select(*occ_cols)
+            .select(
+                F.lit(col).alias("field"), "term", "doc_id",
+                F.col("pos").cast("int").alias("pos"), "_dl",
+            )
         )
         length_parts.append(
             toks.select(
@@ -264,9 +166,8 @@ def occurrence_frames(
             qcol(col).cast("string").alias("term"),
             doc,
             F.lit(0).cast("int").alias("pos"),
+            _dl_of(F.lit(1)),
         ]
-        if inline_dl:
-            kw_cols.append(_dl_of(F.lit(1)))
         occ_parts.append(df.filter(qcol(col).isNotNull()).select(*kw_cols))
         length_parts.append(
             df.filter(qcol(col).isNotNull()).select(
@@ -302,7 +203,9 @@ class InvertedIndex:
 
     Tables:
       forward        : the input rows (doc_id + stored/sortable columns)
-      postings       : (field, term, doc_id, tf[, positions])
+      postings       : (field, term, doc_id, tf, positions, _bdl) — the
+                       store reader's decoded schema; ``_bdl`` is the
+                       document length as built (norm_dl when quantized)
       field_lengths  : (field, doc_id, dl, norm_dl)
       term_stats     : (field, term, df, cf)
     plus per-field corpus stats (N, sum_dl -> avgdl).
@@ -359,15 +262,24 @@ class InvertedIndex:
         """
         spark = df.sparkSession
         keyword_cols = list(keyword_cols or [])
-        postings, field_lengths = posting_frames(
+        occurrences, field_lengths = occurrence_frames(
             df,
             id_col=id_col,
             text_cols=text_cols,
             keyword_cols=keyword_cols,
             array_cols=array_cols,
             dutch_cols=dutch_cols,
-            positions=positions,
+            quantized=quantized,
         )
+        # one posting per (field, term, doc): tf, sorted positions and the
+        # document length, which every occurrence of the doc carries
+        aggs = [F.count("*").cast("long").alias("tf"), F.max("_dl").alias("_bdl")]
+        if positions:
+            aggs.append(F.sort_array(F.collect_list("pos")).alias("positions"))
+        postings = occurrences.groupBy("field", "term", "doc_id").agg(*aggs)
+        if not positions:
+            postings = postings.withColumn("positions", F.lit(None).cast("array<int>"))
+        postings = postings.select("field", "term", "doc_id", "tf", "positions", "_bdl")
 
         term_stats = postings.groupBy("field", "term").agg(
             F.count("*").cast("long").alias("df"),
@@ -385,27 +297,19 @@ class InvertedIndex:
         # below (guide §2.6: the two jobs are independent — the stats
         # aggregate only touches field_lengths). Build latency becomes
         # max(stats job, postings job) instead of their sum; Spark's
-        # per-partition cache locks make a consumer racing this thread
-        # compute-or-wait, never double-compute. Failures surface in the
-        # first real consumer action (same computation), so the warmer
-        # swallows its own exception.
-        if cache:
-            import threading
-
-            def _warm(p=postings):
-                try:
-                    p.count()
-                except Exception:
-                    pass
-
-            threading.Thread(target=_warm, daemon=True).start()
-
+        # per-partition cache locks make a consumer racing the warm-up
+        # compute-or-wait, never double-compute. A failed warm-up raises
+        # from build.
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            warm = pool.submit(postings.count) if cache else None
+            stat_rows = (
+                field_lengths.groupBy("field")
+                .agg(F.count("*").alias("nd"), F.sum("dl").alias("sdl"))
+                .collect()
+            )
+            if warm is not None:
+                warm.result()
         stats: dict[str, FieldStats] = {}
-        stat_rows = (
-            field_lengths.groupBy("field")
-            .agg(F.count("*").alias("nd"), F.sum("dl").alias("sdl"))
-            .collect()
-        )
         omit = set(keyword_cols)
         for r in stat_rows:
             stats[r["field"]] = FieldStats(
@@ -449,8 +353,9 @@ class InvertedIndex:
             return FieldStats(n_docs=self.n_docs, sum_dl=self.n_docs or 1)
         return self.stats[fld]
 
-    def postings_for(self, fld: str) -> DataFrame:
-        return self.postings.filter(F.col("field") == fld)
+    def postings_for(self, fld: str, with_dl: bool = False) -> DataFrame:
+        p = self.postings.filter(F.col("field") == fld)
+        return p if with_dl else p.drop("_bdl")
 
     def lengths_for(self, fld: str) -> DataFrame:
         return self.field_lengths.filter(F.col("field") == fld).select(

@@ -660,10 +660,6 @@ class MultiGenIndex:
             return FieldStats(n_docs=self.n_docs, sum_dl=self.n_docs or 1)
         return FieldStats(n_docs=n, sum_dl=sdl, omit_norms=omit)
 
-    # generation stores are PersistentIndex — the per-posting dl stream
-    # capability (postings_for(with_dl=True) -> _bdl) unions through
-    inline_dl = True
-
     def postings_for(self, fld: str, with_dl: bool = False) -> DataFrame:
         # Union the RAW block frames (field/term filters still push into
         # every generation's parquet scan) and decode ONCE: one Python
@@ -686,12 +682,11 @@ class MultiGenIndex:
         )
 
     def lengths_for(self, fld: str) -> DataFrame:
-        # MUST be liveness-filtered: the executor joins postings to
-        # lengths by bare doc_id (executor.py _term_hits/_phrase_hits),
-        # so after an upsert the id has a length row in BOTH its old and
-        # new generation — an unfiltered union duplicates every hit with
-        # a stale-dl score. Lucene semantics: a live doc has exactly one
-        # norm and dead docs never match (delete-then-add,
+        # Scoring no longer reads this table (every posting carries its
+        # document length as _bdl); it is the lengths view callers key
+        # by bare doc_id. MUST be liveness-filtered: after an upsert the
+        # id has a length row in BOTH its old and new generation, and a
+        # live doc has exactly one norm (delete-then-add,
         # Lucene.java:166-171).
         return self._live(self._union(lambda s: s.lengths_for(fld)))
 

@@ -350,10 +350,13 @@ def build_index_store(
     identical to an uninterrupted one (tested).
 
     ``occurrences``/``lengths`` override the tokenize pass with
-    precomputed frames (occurrences: field, term, doc_id, pos; lengths:
-    field, doc_id, dl, norm_dl) — the generation-merge path re-encodes
-    decoded postings WITHOUT re-tokenizing (Lucene's merge copies
-    postings, it never re-analyzes: index/incremental.py).
+    precomputed frames shaped like ``builder.occurrence_frames`` output
+    (occurrences: field, term, doc_id, pos, _dl; lengths: field,
+    doc_id, dl, norm_dl). ``_dl`` is required: it is the document
+    length the blocks store (norm_dl when ``quantized``). The
+    generation-merge path re-encodes decoded postings WITHOUT
+    re-tokenizing (Lucene's merge copies postings, it never re-analyzes:
+    index/incremental.py).
 
     ``lineage=False`` skips the shard-lineage pass (a full re-read +
     hash + write of the encoded postings). Queries never touch lineage —
@@ -369,9 +372,8 @@ def build_index_store(
     os.makedirs(out_dir, exist_ok=True)
     if occurrences is not None and lengths is not None:
         occurrences_lazy, lengths_lazy = occurrences, lengths
-        have_inline_dl = "_dl" in occurrences.columns
     else:
-        # carry the document length ON the occurrence rows (the same
+        # the document length rides ON the occurrence rows (the same
         # token arrays produce both), so the encode stage needs no
         # (field, doc_id) shuffle join against the lengths table
         occurrences_lazy, lengths_lazy = occurrence_frames(
@@ -381,9 +383,8 @@ def build_index_store(
             keyword_cols=keyword_cols,
             array_cols=array_cols,
             dutch_cols=dutch_cols,
-            inline_dl="norm_dl" if quantized else "dl",
+            quantized=quantized,
         )
-        have_inline_dl = True
     forward = df.withColumnRenamed(id_col, "doc_id") if id_col != "doc_id" else df
     flat_dir = os.path.join(out_dir, "_flat_postings")
     post_dir = os.path.join(out_dir, "postings")
@@ -605,17 +606,6 @@ def build_index_store(
                 % n_shards
             ).cast("int"),
         )
-        if not have_inline_dl:
-            # precomputed-occurrence feeds (merge path) have no _dl on
-            # the rows; attach it from the lengths table as before
-            dl_col = "norm_dl" if quantized else "dl"
-            lengths_df = spark.read.parquet(
-                os.path.join(out_dir, "field_lengths")
-            )
-            flat = flat.join(
-                lengths_df.select("field", "doc_id", F.col(dl_col).alias("_dl")),
-                ["field", "doc_id"],
-            )
 
         # ---- shard-level resume via lineage rows ----
         done_shards: set[int] = set()
@@ -946,104 +936,37 @@ def decode_block_frame(
     MultiGenIndex (a UNION of stores' block frames decoded ONCE —
     one Python eval stage per query instead of one per generation)."""
     pt = list(passthrough)
-    if with_dl:
-        @F.pandas_udf(
-            "struct<doc_ids:array<bigint>,tfs:array<bigint>,"
-            "dls:array<bigint>,positions:array<array<int>>>"
-        )
-        def _decode_dl(
-            doc_b: pd.Series, tf_b: pd.Series, dl_b: pd.Series,
-            pos_b: pd.Series,
-        ) -> pd.DataFrame:
-            docs_out, tfs_out, dls_out, pos_out = [], [], [], []
-            for db, tb, lb, pb in zip(doc_b, tf_b, dl_b, pos_b):
-                doc_ids, tfs = decode_doc_block(db, tb)
-                docs_out.append(doc_ids.astype(np.int64).tolist())
-                tfs_out.append(tfs.astype(np.int64).tolist())
-                dls_out.append(varint_decode(lb).astype(np.int64).tolist())
-                pos_out.append(decode_positions(pb, tfs))
-            return pd.DataFrame(
-                {
-                    "doc_ids": docs_out,
-                    "tfs": tfs_out,
-                    "dls": dls_out,
-                    "positions": pos_out,
-                }
-            )
-
-        decoded = blocks.select(
-            "term",
-            *pt,
-            _decode_dl(
-                F.col("doc_bytes"), F.col("tf_bytes"), F.col("dl_bytes"),
-                F.col("pos_bytes"),
-            ).alias("_d"),
-        )
-        return decoded.select(
-            F.lit(fld).alias("field"),
-            "term",
-            *pt,
-            F.explode(
-                F.arrays_zip(
-                    F.col("_d.doc_ids").alias("doc_id"),
-                    F.col("_d.tfs").alias("tf"),
-                    F.col("_d.dls").alias("_bdl"),
-                    F.col("_d.positions").alias("positions"),
-                )
-            ).alias("_p"),
-        ).select(
-            "field",
-            "term",
-            *pt,
-            F.col("_p.doc_id").alias("doc_id"),
-            F.col("_p.tf").alias("tf"),
-            F.col("_p._bdl").alias("_bdl"),
-            F.col("_p.positions").alias("positions"),
-        )
+    # decoded streams, named as their output columns; dl only when asked
+    names = ["doc_id", "tf"] + (["_bdl"] if with_dl else []) + ["positions"]
+    in_cols = ["doc_bytes", "tf_bytes"] + (["dl_bytes"] if with_dl else []) + [
+        "pos_bytes"
+    ]
 
     @F.pandas_udf(
-        "struct<doc_ids:array<bigint>,tfs:array<bigint>,"
-        "positions:array<array<int>>>"
+        "struct<doc_id:array<bigint>,tf:array<bigint>,"
+        + ("_bdl:array<bigint>," if with_dl else "")
+        + "positions:array<array<int>>>"
     )
-    def _decode(
-        doc_b: pd.Series, tf_b: pd.Series, pos_b: pd.Series
-    ) -> pd.DataFrame:
-        docs_out, tfs_out, pos_out = [], [], []
-        for db, tb, pb in zip(doc_b, tf_b, pos_b):
-            doc_ids, tfs = decode_doc_block(db, tb)
-            docs_out.append(doc_ids.astype(np.int64).tolist())
-            tfs_out.append(tfs.astype(np.int64).tolist())
-            pos_out.append(decode_positions(pb, tfs))
-        return pd.DataFrame(
-            {"doc_ids": docs_out, "tfs": tfs_out, "positions": pos_out}
-        )
+    def _decode(*cols: pd.Series) -> pd.DataFrame:
+        out: dict[str, list] = {k: [] for k in names}
+        for row in zip(*cols):
+            doc_ids, tfs = decode_doc_block(row[0], row[1])
+            out["doc_id"].append(doc_ids.astype(np.int64).tolist())
+            out["tf"].append(tfs.astype(np.int64).tolist())
+            if with_dl:
+                out["_bdl"].append(varint_decode(row[2]).astype(np.int64).tolist())
+            out["positions"].append(decode_positions(row[-1], tfs))
+        return pd.DataFrame(out)
 
-    decoded = blocks.select(
-        "term",
-        *pt,
-        _decode(
-            F.col("doc_bytes"), F.col("tf_bytes"), F.col("pos_bytes")
-        ).alias("_d"),
-    )
+    decoded = blocks.select("term", *pt, _decode(*in_cols).alias("_d"))
     return decoded.select(
         F.lit(fld).alias("field"),
         "term",
         *pt,
         F.explode(
-            F.arrays_zip(
-                F.col("_d.doc_ids").alias("doc_id"),
-                F.col("_d.tfs").alias("tf"),
-                F.col("_d.positions").alias("positions"),
-            )
+            F.arrays_zip(*[F.col(f"_d.{k}").alias(k) for k in names])
         ).alias("_p"),
-    ).select(
-        "field",
-        "term",
-        *pt,
-        F.col("_p.doc_id").alias("doc_id"),
-        F.col("_p.tf").alias("tf"),
-        F.col("_p.positions").alias("positions"),
-    )
+    ).select("field", "term", *pt, "_p.*")
 
 
 # Session-scoped HANDLE cache (not a result cache): opening a store costs
@@ -1138,25 +1061,19 @@ class PersistentIndex:
             return FieldStats(n_docs=self.n_docs, sum_dl=self.n_docs or 1)
         return self.stats[fld]
 
-    # capability flag: the posting blocks carry the per-posting document
-    # length stream, so scoring can skip the field_lengths join entirely
-    # (postings_for(with_dl=True) exposes it as _bdl)
-    inline_dl = True
-
     def postings_for(self, fld: str, with_dl: bool = False) -> DataFrame:
         """Lazily-decoded (field, term, doc_id, tf, positions[, _bdl])
-        frame.
+        frame — the postings schema every reader shares.
 
         Decode is a projection + JVM explode: term/field filters applied
         by callers push below it into the parquet scan (PushedFilters),
         so only the filtered terms' blocks are ever decoded.
 
-        ``with_dl=True`` additionally decodes the blocks' dl stream into
-        a ``_bdl`` column (the document length AS BUILT — norm_dl when the
-        store was built quantized, raw dl otherwise): scoring reads the
-        length straight off the posting instead of joining the
-        field_lengths table — one broadcast join and one full lengths
-        scan removed from every term/phrase query (guide §2.4)."""
+        ``with_dl=True`` also decodes the blocks' dl stream into ``_bdl``
+        (the document length AS BUILT — norm_dl when the store was built
+        quantized, raw dl otherwise), which BM25 scoring reads straight
+        off the posting. Callers that never score (clustering,
+        prefix/wildcard) leave it False and skip that stream's decode."""
         return decode_block_frame(
             self.blocks.filter(F.col("field") == fld), fld, with_dl
         )

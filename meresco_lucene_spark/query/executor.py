@@ -5,11 +5,14 @@ Reproduces the reference's single-core query surface
 excludeQueries + facets + sortKeys + start/stop pagination + dedup —
 each recast as DataFrame ops:
 
-  TermQuery     -> postings filter + stats joins + BM25 column expr
+  TermQuery     -> postings filter + broadcast term_stats join + BM25
+                   column expr over the posting's own dl (_bdl); one
+                   scorer, shared with a boolean's same-field terms
   BooleanQuery  -> union of scoring-clause frames + groupBy sum(score)
                    with a matched-MUST count gate; FILTER -> left_semi;
                    MUST_NOT -> left_anti              (Q3 in SURVEY §2.2)
-  PhraseQuery   -> per-term postings joins + position-adjacency HOFs
+  PhraseQuery   -> one postings scan grouped by doc_id + position-
+                   adjacency HOFs
   Prefix/Wildcard -> term-range scan, constant score (Lucene rewrite)
   RangeQuery    -> plain column predicate on the forward table
   dedup         -> Window.partitionBy(key) + row_number / count
@@ -53,20 +56,21 @@ from meresco_lucene_spark.query.ir import FILTER, MUST, MUST_NOT, SHOULD, Q
 # --------------------------------------------------------------------------- hits
 
 
-def hits(index: InvertedIndex, q: Q, quantized: bool | None = None) -> DataFrame:
+def hits(index: InvertedIndex, q: Q) -> DataFrame:
     """Scored hit frame for a query: DataFrame(doc_id, score)."""
-    quantized = index_quantized(index, quantized)
     t = q.type
     if t == "MatchAllDocsQuery":
         return index.forward.select(
             "doc_id", F.lit(1.0 * q.boost).alias("score")
         )
     if t == "TermQuery":
-        return _term_hits(index, q.field, q.value, q.boost, quantized)
+        return _fused_term_hits(index, q.field, [(q, False)]).select(
+            "doc_id", "score"
+        )
     if t == "BooleanQuery":
-        return _bool_hits(index, q, quantized)
+        return _bool_hits(index, q)
     if t == "PhraseQuery":
-        return _phrase_hits(index, q, quantized)
+        return _phrase_hits(index, q)
     if t == "PrefixQuery":
         return _multi_term_hits(
             index, q.field, F.col("term").startswith(q.value), q.boost
@@ -116,88 +120,10 @@ def _distance_hits(index: InvertedIndex, q: Q) -> DataFrame:
     )
 
 
-def index_quantized(index: InvertedIndex, override: bool | None) -> bool:
-    if override is not None:
-        return override
-    return bool(getattr(index, "quantized", False))
-
-
 def _re_escape(c: str) -> str:
     import re
 
     return re.escape(c)
-
-
-def _dl_col(stats_omit_norms: bool, quantized: bool) -> Column:
-    if stats_omit_norms:
-        # Norms omitted (StringField / NoTermsFrequencyField,
-        # DocumentStringToDocument.java:97-98): Lucene's norm term
-        # collapses to 1 -> tfNorm = tf / (tf + k1).
-        return F.lit(None)
-    return F.col("norm_dl") if quantized else F.col("dl")
-
-
-def _use_inline_dl(index: InvertedIndex, quantized: bool) -> bool:
-    """True when the index's posting blocks carry the document length
-    the query wants (built quantized == queried quantized): scoring then
-    reads dl straight off the decoded posting (_bdl) instead of joining
-    the field_lengths table — one join + one full lengths scan removed
-    per scored term (guide §2.4)."""
-    return bool(getattr(index, "inline_dl", False)) and quantized == bool(
-        getattr(index, "quantized", False)
-    )
-
-
-def _term_hits(
-    index: InvertedIndex,
-    fld: str,
-    value: str,
-    boost: float,
-    quantized: bool,
-    similarity: str | None = None,
-) -> DataFrame:
-    st = index.field_stats(fld)
-    sim = similarity or getattr(index, "similarity", "BM25")
-    needs_dl = sim != "TermFrequency" and not st.omit_norms
-    inline = needs_dl and _use_inline_dl(index, quantized)
-    if inline:
-        p = (
-            index.postings_for(fld, with_dl=True)
-            .filter(F.col("term") == value)
-            .select("doc_id", "tf", "_bdl")
-        )
-    else:
-        p = (
-            index.postings_for(fld)
-            .filter(F.col("term") == value)
-            .select("doc_id", "tf")
-        )
-    if sim == "TermFrequency":
-        # reference search/TermFrequencySimilarity.java:40-58
-        return p.select("doc_id", term_frequency_score_expr(F.col("tf"), boost).alias("score"))
-    tstats = (
-        index.term_stats_for(fld).filter(F.col("term") == value).select(
-            F.col("df").alias("_df")
-        )
-    )
-    scored = p.crossJoin(F.broadcast(tstats))
-    if st.omit_norms:
-        score = (
-            idf_expr(F.col("_df"), st.n_docs)
-            * (F.col("tf").cast("double") / (F.col("tf") + F.lit(index.k1)))
-            * F.lit(boost)
-        )
-        return scored.select("doc_id", score.alias("score"))
-    if inline:
-        dl = F.col("_bdl")
-    else:
-        lengths = index.lengths_for(fld)
-        dl = F.col("norm_dl") if quantized else F.col("dl")
-        scored = scored.join(lengths, "doc_id")
-    score = bm25_score_expr(
-        F.col("tf"), F.col("_df"), dl, st.n_docs, st.avgdl, index.k1, index.b, boost
-    )
-    return scored.select("doc_id", score.alias("score"))
 
 
 def _multi_term_hits(
@@ -241,19 +167,21 @@ def _fused_term_hits(
     index: InvertedIndex,
     fld: str,
     clauses: list[tuple[Q, bool]],
-    quantized: bool,
 ) -> DataFrame:
-    """Several TermQuery scoring clauses on ONE field in ONE postings
-    scan (guide §6.2 scan once / §4.1): ``term isin (...)`` replaces one
-    filtered scan + decode branch per clause, per-term df comes from a
-    broadcast term_stats join, and the per-clause (boost, MUST) weights
-    fold into per-term CASE expressions. Row-for-row identical to the
-    per-clause union it replaces: a doc matching term t contributed one
-    row per clause of t with score s_t*boost_c and is_must flag — here
-    the same addends arrive pre-summed per term (s_t*Σboost_c, count of
-    MUST clauses), which the downstream groupBy aggregates identically.
-    With all boosts 1.0 (the common case) the score expression is
-    EXACTLY the single-clause expression."""
+    """The one TermQuery scorer: every TermQuery scoring clause on ONE
+    field in ONE postings scan (guide §6.2 scan once / §4.1) — a plain
+    TermQuery is a single clause. ``term isin (...)`` filters the scan
+    (a single value becomes an EqualTo, still pushed into the parquet
+    scan), per-term df comes from a broadcast term_stats join, the
+    document length rides the posting (``_bdl``), and the per-clause
+    (boost, MUST) weights fold into per-term CASE expressions.
+    Row-for-row identical to a per-clause union: a doc matching term t
+    would contribute one row per clause of t with score s_t*boost_c and
+    is_must flag — here the same addends arrive pre-summed per term
+    (s_t*Σboost_c, count of MUST clauses), which the downstream groupBy
+    aggregates identically. With all boosts 1.0 (the common case) the
+    score expression is EXACTLY the unboosted BM25 expression.
+    Returns (doc_id, score, is_must)."""
     st = index.field_stats(fld)
     sim = getattr(index, "similarity", "BM25")
     # per distinct term: summed boost of its clauses + its MUST count
@@ -276,15 +204,13 @@ def _fused_term_hits(
 
     is_must_c = _per_term(w_must, "int").alias("is_must")
     uniform_boost = set(w_boost.values()) == {1.0}
+    # Norms omitted (StringField / NoTermsFrequencyField,
+    # DocumentStringToDocument.java:97-98) or TermFrequency similarity:
+    # the score never reads the document length, so skip its decode
     needs_dl = sim != "TermFrequency" and not st.omit_norms
-    inline = needs_dl and _use_inline_dl(index, quantized)
-    cols = ["term", "doc_id", "tf"] + (["_bdl"] if inline else [])
-    p = (
-        index.postings_for(fld, with_dl=True)
-        if inline
-        else index.postings_for(fld)
-    ).filter(F.col("term").isin(values)).select(*cols)
+    p = index.postings_for(fld, with_dl=needs_dl).filter(F.col("term").isin(values))
     if sim == "TermFrequency":
+        # reference search/TermFrequencySimilarity.java:40-58
         score = term_frequency_score_expr(F.col("tf"), 1.0)
     else:
         tstats = index.term_stats_for(fld).filter(
@@ -292,17 +218,13 @@ def _fused_term_hits(
         ).select("term", F.col("df").alias("_df"))
         p = p.join(F.broadcast(tstats), "term")
         if st.omit_norms:
+            # Lucene's norm term collapses to 1 -> tfNorm = tf / (tf + k1)
             score = idf_expr(F.col("_df"), st.n_docs) * (
                 F.col("tf").cast("double") / (F.col("tf") + F.lit(index.k1))
             )
         else:
-            if inline:
-                dl = F.col("_bdl")
-            else:
-                p = p.join(index.lengths_for(fld), "doc_id")
-                dl = F.col("norm_dl") if quantized else F.col("dl")
             score = bm25_score_expr(
-                F.col("tf"), F.col("_df"), dl, st.n_docs, st.avgdl,
+                F.col("tf"), F.col("_df"), F.col("_bdl"), st.n_docs, st.avgdl,
                 index.k1, index.b,
             )
     if not uniform_boost:
@@ -310,7 +232,7 @@ def _fused_term_hits(
     return p.select("doc_id", score.alias("score"), is_must_c)
 
 
-def _bool_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
+def _bool_hits(index: InvertedIndex, q: Q) -> DataFrame:
     musts = [c for occ, c in q.clauses if occ == MUST]
     shoulds = [c for occ, c in q.clauses if occ == SHOULD]
     filters = [c for occ, c in q.clauses if occ == FILTER]
@@ -320,7 +242,7 @@ def _bool_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
         (c, False) for c in shoulds
     ]
     if scoring:
-        # Same-field TermQuery clauses fuse into one scan (see
+        # Same-field TermQuery clauses share one scan (see
         # _fused_term_hits); everything else keeps its own hit frame.
         by_field: dict[str, list[tuple[Q, bool]]] = {}
         rest: list[tuple[Q, bool]] = []
@@ -329,16 +251,11 @@ def _bool_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
                 by_field.setdefault(c.field, []).append((c, is_must))
             else:
                 rest.append((c, is_must))
-        frames = []
-        for fldname, grp in by_field.items():
-            if len(grp) >= 2:
-                frames.append(
-                    _fused_term_hits(index, fldname, grp, quantized)
-                )
-            else:
-                rest.extend(grp)
+        frames = [
+            _fused_term_hits(index, fldname, grp) for fldname, grp in by_field.items()
+        ]
         frames += [
-            hits(index, c, quantized).select(
+            hits(index, c).select(
                 "doc_id", "score", F.lit(1 if is_must else 0).alias("is_must")
             )
             for c, is_must in rest
@@ -365,19 +282,15 @@ def _bool_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
         )
 
     for c in filters:
-        base = base.join(
-            hits(index, c, quantized).select("doc_id"), "doc_id", "left_semi"
-        )
+        base = base.join(hits(index, c).select("doc_id"), "doc_id", "left_semi")
     for c in nots:
-        base = base.join(
-            hits(index, c, quantized).select("doc_id"), "doc_id", "left_anti"
-        )
+        base = base.join(hits(index, c).select("doc_id"), "doc_id", "left_anti")
     if q.boost != 1.0:
         base = base.select("doc_id", (F.col("score") * q.boost).alias("score"))
     return base
 
 
-def _phrase_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
+def _phrase_hits(index: InvertedIndex, q: Q) -> DataFrame:
     """Ordered-adjacent phrase match via per-term position arrays.
 
     Matching: positions p in terms[0] with p+i present in terms[i] for
@@ -387,76 +300,47 @@ def _phrase_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
         raise ValueError("index built without positions; phrase queries unavailable")
     terms = list(q.terms)
     if len(terms) == 1:
-        return _term_hits(index, q.field, terms[0], q.boost, quantized)
+        return hits(index, Q.term(q.field, terms[0], boost=q.boost))
     st = index.field_stats(q.field)
 
-    inline = _use_inline_dl(index, quantized)
-    if getattr(index, "inline_dl", False):
-        # Disk stores decode blocks through a pandas UDF, so each
-        # per-term branch costs a scan + Python decode stage: gather
-        # all phrase terms in ONE scan instead (guide §6.2 scan once /
-        # §4.1) and pick the per-term position arrays by a doc_id
-        # aggregation with FIRST(CASE) — a doc has at most one posting
-        # per term, so the picks are deterministic and the doc set
-        # (all terms present) matches the inner-join chain this
-        # replaces row for row. Besides halving the decode branches,
-        # this removes a size-estimated broadcast join whose build
-        # side sat above a pandas UDF (Catalyst cannot estimate that
-        # side — a mid-frequency term there was a broadcast-OOM hazard
-        # at scale); the aggregation is shuffle-bounded and
-        # AQE-coalesced. The session-cached DataFrame index keeps the
-        # broadcast-join shape: its postings are already decoded in
-        # memory, so there is no branch cost to save and the
-        # aggregation would only add an exchange (measured r6).
-        distinct_terms = list(dict.fromkeys(terms))
-        p = (
-            index.postings_for(q.field, with_dl=True)
-            if inline
-            else index.postings_for(q.field)
-        ).filter(F.col("term").isin(distinct_terms))
-        aggs = [
-            F.first(
-                F.when(F.col("term") == t, F.col("positions")), ignorenulls=True
-            ).alias(f"_q{j}")
-            for j, t in enumerate(distinct_terms)
-        ]
-        if inline:
-            # dl rides the first term's posting — no lengths join below
-            aggs.append(
-                F.first(
-                    F.when(F.col("term") == terms[0], F.col("_bdl")),
-                    ignorenulls=True,
-                ).alias("_bdl")
-            )
-        g = p.groupBy("doc_id").agg(*aggs)
-        present = None
-        for j in range(len(distinct_terms)):
-            c = F.col(f"_q{j}").isNotNull()
-            present = c if present is None else (present & c)
-        sel = ["doc_id"] + [
+    # All phrase terms come from ONE postings scan (guide §6.2 scan once
+    # / §4.1), and the per-term position arrays are picked by a doc_id
+    # aggregation with FIRST(CASE) — a doc has at most one posting per
+    # term, so the picks are deterministic, and the doc set (all terms
+    # present) is the inner-join chain's. Over a store this is one scan
+    # + Python decode stage instead of one per term, and no join whose
+    # build side sits above a pandas UDF (Catalyst cannot estimate that
+    # side — a mid-frequency term there was a broadcast-OOM hazard at
+    # scale); the aggregation is shuffle-bounded and AQE-coalesced. The
+    # document length rides the first term's posting (_bdl).
+    distinct_terms = list(dict.fromkeys(terms))
+    p = index.postings_for(q.field, with_dl=True).filter(
+        F.col("term").isin(distinct_terms)
+    )
+    aggs = [
+        F.first(
+            F.when(F.col("term") == t, F.col("positions")), ignorenulls=True
+        ).alias(f"_q{j}")
+        for j, t in enumerate(distinct_terms)
+    ]
+    aggs.append(
+        F.first(
+            F.when(F.col("term") == terms[0], F.col("_bdl")), ignorenulls=True
+        ).alias("_bdl")
+    )
+    g = p.groupBy("doc_id").agg(*aggs)
+    present = None
+    for j in range(len(distinct_terms)):
+        c = F.col(f"_q{j}").isNotNull()
+        present = c if present is None else (present & c)
+    joined = g.filter(present).select(
+        "doc_id",
+        *[
             F.col(f"_q{distinct_terms.index(t)}").alias(f"_p{i}")
             for i, t in enumerate(terms)
-        ]
-        if inline:
-            sel.append(F.col("_bdl"))
-        joined = g.filter(present).select(*sel)
-    else:
-        joined = None
-        for i, t in enumerate(terms):
-            cols = ["doc_id", F.col("positions").alias(f"_p{i}")]
-            if inline and i == 0:
-                p = (
-                    index.postings_for(q.field, with_dl=True)
-                    .filter(F.col("term") == t)
-                    .select(*cols, "_bdl")
-                )
-            else:
-                p = (
-                    index.postings_for(q.field)
-                    .filter(F.col("term") == t)
-                    .select(*cols)
-                )
-            joined = p if joined is None else joined.join(p, "doc_id")
+        ],
+        "_bdl",
+    )
 
     conds = " AND ".join(
         f"exists(_p{i}, y -> y = x + {i})" for i in range(1, len(terms))
@@ -484,15 +368,9 @@ def _phrase_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
     )
 
     cand = cand.crossJoin(F.broadcast(idf_sum))
-    if inline:
-        dl = F.col("_bdl")
-    else:
-        lengths = index.lengths_for(q.field)
-        dl = F.col("norm_dl") if quantized else F.col("dl")
-        cand = cand.join(lengths, "doc_id")
     score = (
         F.col("_idf_sum")
-        * tf_norm_expr(F.col("_pf"), dl, st.avgdl, index.k1, index.b)
+        * tf_norm_expr(F.col("_pf"), F.col("_bdl"), st.avgdl, index.k1, index.b)
         * F.lit(q.boost)
     )
     return cand.select("doc_id", score.alias("score"))
@@ -632,18 +510,17 @@ def scored_hits_df(
     filter_queries: Sequence[Q] = (),
     exclude_queries: Sequence[Q] = (),
     key_filters: Sequence[tuple[DataFrame, str, bool]] = (),
-    quantized: bool | None = None,
 ) -> DataFrame:
     """Hit frame after filters/excludes/key-set joins.
 
     key_filters: (keys_df with single column key, key_field_in_forward,
     inverted) triples — the composed-query KeyFilter (queries/KeyFilter.java:46-124):
     semi-join normally, anti-join when inverted."""
-    h = hits(index, query or Q.matchall(), quantized)
+    h = hits(index, query or Q.matchall())
     for fq in filter_queries:
-        h = h.join(hits(index, fq, quantized).select("doc_id"), "doc_id", "left_semi")
+        h = h.join(hits(index, fq).select("doc_id"), "doc_id", "left_semi")
     for eq in exclude_queries:
-        h = h.join(hits(index, eq, quantized).select("doc_id"), "doc_id", "left_anti")
+        h = h.join(hits(index, eq).select("doc_id"), "doc_id", "left_anti")
     if key_filters:
         fwd = index.forward
         for keys_df, key_field, inverted in key_filters:
@@ -673,7 +550,6 @@ def search(
     dedup_sort_fields: Sequence[dict] = (),
     stored_fields: Sequence[str] = (),
     score_adjust: "callable | None" = None,
-    quantized: bool | None = None,
 ) -> LuceneResponse:
     """The reference's executeQuery in one pass (Lucene.java:247-349).
 
@@ -683,7 +559,7 @@ def search(
 
     score_adjust: optional fn(hits_df)->hits_df applied before ranking —
     the composed-query rank-blend hook (AggregateScoreSuperCollector)."""
-    h = scored_hits_df(index, query, filter_queries, exclude_queries, key_filters, quantized)
+    h = scored_hits_df(index, query, filter_queries, exclude_queries, key_filters)
     if score_adjust is not None:
         h = score_adjust(h)
 

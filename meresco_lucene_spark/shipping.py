@@ -10,6 +10,7 @@ SparkContext.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -19,14 +20,24 @@ from pyspark.sql import SparkSession
 _SHIPPED: set[str] = set()
 
 
+def checkout_digest(pkg_dir: str) -> str:
+    """Short digest of a package directory's absolute path."""
+    return hashlib.sha1(os.path.abspath(pkg_dir).encode()).hexdigest()[:12]
+
+
 def package_zip_path() -> str:
     """Build a zip of meresco_lucene_spark for --py-files / addPyFile.
 
     Rebuilt whenever any package source is newer than the cached zip —
     a stale zip silently ships OLD code to executors (new modules raise
-    ModuleNotFoundError inside UDF deserialization)."""
+    ModuleNotFoundError inside UDF deserialization). The file name
+    carries a digest of the package directory, so two checkouts on one
+    host never ship each other's code."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "meresco_lucene_spark_pyfiles.zip")
+    out = os.path.join(
+        tempfile.gettempdir(),
+        f"meresco_lucene_spark_pyfiles-{checkout_digest(pkg_dir)}.zip",
+    )
     newest = 0.0
     for root, _dirs, files in os.walk(pkg_dir):
         if "__pycache__" in root:

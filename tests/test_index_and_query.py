@@ -248,6 +248,19 @@ def test_quantized_scoring_end_to_end(spark):
     assert abs(got[0] - expect0_raw) > 1e-6
 
 
+def test_cache_warm_failure_raises_from_build(spark, monkeypatch):
+    """The postings cache warm-up runs concurrently with the stats
+    collect, but its failure must surface from build, not vanish in a
+    background thread."""
+    def _fail(self):
+        raise RuntimeError("warm-up failed")
+
+    df = spark.createDataFrame(pd.DataFrame(DOCS, columns=["doc_id", "text", "lang", "stars"]))
+    monkeypatch.setattr(type(df), "count", _fail)  # the session's DataFrame class
+    with pytest.raises(RuntimeError, match="warm-up failed"):
+        InvertedIndex.build(df, id_col="doc_id", text_cols=["text"], cache=True)
+
+
 def test_quantized_norms_change_dl(idx):
     # dl=5 is <8 so exact; craft check via norm_dl column equality instead
     rows = {r["doc_id"]: (r["dl"], r["norm_dl"]) for r in idx.lengths_for("text").collect()}

@@ -22,7 +22,7 @@ import pyspark
 
 from meresco_lucene_spark.analysis.tokenizer import tokenize_text
 from meresco_lucene_spark.corpus import content_for_row
-from meresco_lucene_spark.shipping import package_zip_path
+from meresco_lucene_spark.shipping import checkout_digest, package_zip_path
 
 N, SEED, K = 800, 42, 10
 K1, B = 1.2, 0.75
@@ -107,3 +107,15 @@ def test_spark_submit_py_files(tmp_path):
     # OR query: scores strictly descending, ids present, k rows.
     ors = [s for _, s in res["or_topk"]]
     assert len(ors) == K and all(a >= b - 1e-12 for a, b in zip(ors, ors[1:]))
+
+
+def test_package_zip_name_carries_checkout_digest():
+    """The shipped zip is keyed on the checkout: two checkouts on one
+    host write different files, so neither ships the other's code."""
+    import meresco_lucene_spark
+
+    pkg_dir = os.path.dirname(os.path.abspath(meresco_lucene_spark.__file__))
+    digest = checkout_digest(pkg_dir)
+    assert len(digest) == 12
+    assert digest in os.path.basename(package_zip_path())
+    assert checkout_digest(pkg_dir + "_other") != digest

@@ -100,12 +100,41 @@ QUERIES = [
     Q.range("stars", lower=2, upper=5, include_lower=True, include_upper=False),
     Q.matchall(),
     Q.drilldown("lang", ["py"]),
+    Q.term("lang", "py"),
+    Q.or_(Q.term("text", "spark", boost=2.0), Q.term("text", "spark")),
+    Q.phrase("text", "spark"),
 ]
 
 
-@pytest.mark.parametrize("qi", range(len(QUERIES)))
-def test_query_surface_parity(stores, qi):
-    mem, disk = stores
+@pytest.fixture(scope="module")
+def quantized_stores(spark, tmp_path_factory):
+    """The same DOCS built with SmallFloat-quantized document lengths."""
+    out = str(tmp_path_factory.mktemp("store_q") / "idx")
+    df = spark.createDataFrame(
+        pd.DataFrame(DOCS, columns=["doc_id", "text", "lang", "stars"])
+    )
+    kwargs = dict(
+        id_col="doc_id",
+        text_cols=["text"],
+        keyword_cols=["lang"],
+        facet_fields={"lang": ["lang"]},
+        quantized=True,
+    )
+    build_index_store(df, out, n_shards=4, **kwargs)
+    mem = InvertedIndex.build(df, **kwargs)
+    yield mem, PersistentIndex(spark, out)
+    mem.unpersist()
+
+
+@pytest.mark.parametrize(
+    "pair, qi",
+    [("stores", i) for i in range(len(QUERIES))]
+    + [("quantized_stores", i) for i in range(len(QUERIES))],
+    ids=[str(i) for i in range(len(QUERIES))]
+    + [f"quantized-{i}" for i in range(len(QUERIES))],
+)
+def test_query_surface_parity(request, pair, qi):
+    mem, disk = request.getfixturevalue(pair)
     q = QUERIES[qi]
     assert _hits(disk, q) == _hits(mem, q), f"mismatch for {q.to_dict()}"
 
@@ -144,6 +173,58 @@ def test_term_filter_pushed_to_parquet_scan(stores):
     assert "PushedFilters" in plan
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert any("term" in ln and "spark" in ln for ln in pushed), pushed
+
+
+JOIN_OPS = (
+    "BroadcastHashJoin",
+    "BroadcastNestedLoopJoin",
+    "SortMergeJoin",
+    "ShuffledHashJoin",
+    "CartesianProduct",
+)
+
+
+def _executed_joins(df):
+    """Join nodes of ``df``'s executed (AQE-final) physical plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return [
+        ln.strip() for ln in plan.toString().splitlines()
+        if any(op in ln for op in JOIN_OPS)
+    ]
+
+
+def test_term_query_plan_has_one_join(spark, stores, tmp_path):
+    """Every reader scores a BM25 TermQuery from its postings alone: the
+    document length rides the posting, so the only join is the broadcast
+    term_stats join on term (a MultiGenIndex adds its liveness anti-join
+    against the tombstones, nothing else)."""
+    from meresco_lucene_spark.index.incremental import IncrementalIndexStore
+
+    mem, disk = stores
+    df = spark.createDataFrame(
+        pd.DataFrame(DOCS, columns=["doc_id", "text", "lang", "stars"])
+    )
+    inc = IncrementalIndexStore(
+        spark, str(tmp_path / "inc"), text_cols=["text"], keyword_cols=["lang"],
+        n_shards=2,
+    )
+    inc.commit_batch(df.filter(F.col("doc_id") < 3))
+    inc.commit_batch(df.filter(F.col("doc_id") >= 3))
+    multi = inc.open()
+    assert len(multi.gens) == 2
+    q = Q.term("text", "spark")
+    for name, ix in (("memory", mem), ("store", disk), ("multigen", multi)):
+        joins = _executed_joins(hits(ix, q))
+        scoring = [j for j in joins if "LeftAnti" not in j]
+        assert len(scoring) == 1, (name, joins)
+        assert "BroadcastHashJoin [term#" in scoring[0], (name, joins)
+        assert "Inner" in scoring[0], (name, joins)
+        liveness = [j for j in joins if "LeftAnti" in j]
+        assert len(liveness) == (1 if name == "multigen" else 0), (name, joins)
+    assert _hits(multi, q) == _hits(disk, q)
 
 
 def test_reopen_zero_retokenization(spark, stores, monkeypatch):
